@@ -6,8 +6,8 @@ Three tools:
 - :class:`IvfIndex` — IVF (inverted-file) coarse quantization, the
   batch "vector index build" the north star names. Deterministic
   seeded centroids refined by Lloyd iterations, every step a
-  DataFrame op: assignment is an argmax over a broadcast centroid
-  literal (pure SQL, codegen'd), centroid update is one groupBy with
+  DataFrame op: assignment is an Arrow-batched numpy argmax
+  (:func:`ivf_assign_udf`), centroid update is one groupBy with
   per-component ``avg``. Query probes the ``nprobe`` nearest cells
   and re-ranks exactly — scanning ~nprobe/k of the corpus. At 100 TB
   the table is written partitioned by ``cell`` so a probe prunes
@@ -26,11 +26,13 @@ from typing import Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..functions.hashing import MAX24, det_embed_py
-from ..functions.vector import cosine, dot
+from ..functions.vector import cosine
+from .search import query_vector_lit
 
 # persisted-index root (generated data, gitignored): the build/probe
 # split writes the assigned table here partitioned by cell, so a probe
@@ -44,31 +46,11 @@ INDEX_ROOT = os.environ.get(
 )
 
 
-def _centroid_lit(centroids: list[list[float]]) -> Column:
-    return F.array(
-        *[F.array(*[F.lit(float(x)) for x in c]) for c in centroids]
-    )
-
-
-def ivf_assign_expr(centroids: list[list[float]], vec_col: Column | str) -> Column:
-    """1-based index of the max-dot-product centroid (ties -> first).
-
-    Pure SQL: transform over the centroid literal + array_position of
-    the max — no Python in the executor path. NOTE: array higher-order
-    functions are CodegenFallback (interpreted) — ~1 ms/row at k=16,
-    dim=64. Kept as the expression-only reference; the index uses
-    :func:`ivf_assign_udf` (Arrow-batched numpy matmul, ~1000x the
-    throughput and the shape a 100 TB assignment job actually wants).
-    """
-    vec_col = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    scores = F.transform(_centroid_lit(centroids), lambda c: dot(vec_col, c))
-    return F.array_position(scores, F.array_max(scores)).cast("int")
-
-
 def ivf_assign_udf(centroids: list[list[float]]) -> Column:
     """Vectorized cell assignment: one (batch x dim) @ (dim x k)
-    matmul per Arrow batch, argmax per row (ties -> first, same as
-    ivf_assign_expr). Returns a callable to apply to the vector col."""
+    matmul per Arrow batch, 1-based argmax per row (ties -> first,
+    pinned by tests/test_vector.py::test_ivf_assign_udf_ties_to_first_cell).
+    Returns a callable to apply to the vector col."""
     from pyspark.sql.functions import pandas_udf
 
     C = np.asarray(centroids, dtype="float64").T  # dim x k
@@ -181,8 +163,6 @@ def topk_in_cells(
 ) -> DataFrame:
     """Probe the nprobe nearest cells of an assigned corpus and re-rank
     exactly inside them (shared probe kernel)."""
-    from .search import query_vector_lit
-
     cells = nearest_cells(centroids, query_vec, nprobe)
     cand = assigned.filter(F.col("cell").isin(cells))
     scored = cand.withColumn(
@@ -308,6 +288,10 @@ def build_ivf_index(
     overwrite and re-written (atomically) last, so a rebuild that dies
     mid-way leaves a visibly-absent index (rebuilt on next use), never
     old centroids pointing at new partitions.
+
+    The marker also records the assigned table's schema (``cell``
+    included): probes read with it instead of inferring it from the
+    parquet footers, and appends are validated against it.
     """
     idx = IvfIndex(k=n_cells, iters=iters, dim=dim).fit(df, vec_col)
     os.makedirs(path, exist_ok=True)
@@ -327,6 +311,7 @@ def build_ivf_index(
             "dim": dim,
             "fingerprint": fingerprint,
             "centroids": idx.centroids,
+            "schema": idx.assigned.schema.jsonValue(),
         },
     )
     return idx
@@ -352,13 +337,29 @@ def set_index_fingerprint(path: str, fingerprint: str) -> None:
     write_marker_atomic(marker, meta)
 
 
-def ivf_index_exists(path: str, fingerprint: str | None = None) -> bool:
-    """True iff a readable index is present AND (when given) its stored
-    source fingerprint matches — stale indexes count as absent."""
+def _read_ivf_marker(path: str) -> dict:
+    """The index marker; one without a recorded schema is unusable."""
     from ..store import read_marker
 
-    meta = read_marker(os.path.join(path, "centroids.json"))
-    if not meta:
+    marker = os.path.join(path, "centroids.json")
+    meta = read_marker(marker)
+    if not meta or "schema" not in meta:
+        raise FileNotFoundError(f"no readable index marker at {marker}")
+    return meta
+
+
+def _column_types(schema: StructType) -> dict[str, str]:
+    """Column name -> type, nullability ignored at every nesting level."""
+    return {f.name: f.dataType.simpleString() for f in schema.fields}
+
+
+def ivf_index_exists(path: str, fingerprint: str | None = None) -> bool:
+    """True iff a readable index is present AND (when given) its stored
+    source fingerprint matches — stale indexes count as absent, as
+    does a marker without a recorded schema."""
+    try:
+        meta = _read_ivf_marker(path)
+    except FileNotFoundError:
         return False
     return fingerprint is None or meta.get("fingerprint") == fingerprint
 
@@ -376,12 +377,13 @@ def probe_ivf_index(
     the stored centroids (n_cells tiny), then a partition-pruned scan
     of only those cells, exact re-rank inside (shared kernel
     :func:`topk_in_cells` — cannot drift from the in-memory index).
-    No index rebuild — the read path is what repeated queries pay."""
-    from ..store import read_marker
+    No index rebuild — the read path is what repeated queries pay.
 
-    meta = read_marker(os.path.join(path, "centroids.json"))
-    if not meta:
-        raise FileNotFoundError(f"no readable index marker under {path}")
+    The scan is given the schema recorded in the marker, so Spark
+    skips the parquet schema-inference job it would otherwise start on
+    every probe: a probe's ``collect`` is one job (pinned in
+    tests/test_search.py)."""
+    meta = _read_ivf_marker(path)
     # a dim mismatch was previously SILENT: cosine's zip_with truncates
     # to the shorter array, scoring on a prefix (r10 review)
     if "dim" in meta and len(query_vec) != meta["dim"]:
@@ -389,7 +391,9 @@ def probe_ivf_index(
             f"probe_ivf_index: query dim {len(query_vec)} != stored "
             f"index dim {meta['dim']} at {path}"
         )
-    assigned = spark.read.parquet(os.path.join(path, "assigned"))
+    assigned = spark.read.schema(StructType.fromJson(meta["schema"])).parquet(
+        os.path.join(path, "assigned")
+    )
     return topk_in_cells(
         assigned, meta["centroids"], query_vec, k, nprobe, vec_col, id_col
     )
@@ -420,30 +424,35 @@ def append_ivf_index(
     real one last via set_index_fingerprint (see q3_ann_append), so
     any crash forces that rebuild automatically. Returns the number
     of appended rows.
-    """
-    from ..store import read_marker, write_marker_atomic
 
-    marker = os.path.join(path, "centroids.json")
-    meta = read_marker(marker)
-    if not meta:
-        raise FileNotFoundError(f"no readable index marker at {marker}")
+    The batch, with its ``cell`` column, must have the column names
+    and types recorded at build (nullability ignored); a mismatch
+    raises before anything is written. The row count is an
+    ``Observation`` on the write, so the append is one Spark job and
+    the assignment UDF runs once.
+    """
+    from ..store import write_marker_atomic
+
+    meta = _read_ivf_marker(path)
     if tag in meta.get("appends", {}):
         return 0
-    from ..caching import persist_tracked
-
-    # count + write both reference the assignment — persist so the
-    # Arrow-batched assignment UDF runs once, not twice (r10 review)
-    assigned = persist_tracked(
-        new_vectors.withColumn(
-            "cell", ivf_assign_udf(meta["centroids"])(F.col(vec_col))
+    assigned = new_vectors.withColumn(
+        "cell", ivf_assign_udf(meta["centroids"])(F.col(vec_col))
+    )
+    want = _column_types(StructType.fromJson(meta["schema"]))
+    got = _column_types(assigned.schema)
+    if got != want:
+        raise ValueError(
+            f"append_ivf_index: batch columns {got} do not match the "
+            f"index's recorded columns {want} at {path}"
         )
-    )
-    n = assigned.count()
-    assigned.write.mode("append").partitionBy("cell").parquet(
-        os.path.join(path, "assigned")
-    )
+    obs = Observation("ivf_append")
+    assigned.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
+        "append"
+    ).partitionBy("cell").parquet(os.path.join(path, "assigned"))
+    n = obs.get["n"]
     meta.setdefault("appends", {})[tag] = n
-    write_marker_atomic(marker, meta)
+    write_marker_atomic(os.path.join(path, "centroids.json"), meta)
     return n
 
 
@@ -595,7 +604,7 @@ def random_projection_buckets(
         weights = [
             md5_int_py(f"plane:{p}:{j}") / MAX24 * 2.0 - 1.0 for j in range(dim)
         ]
-        plane = F.array(*[F.lit(float(w)) for w in weights])
+        plane = query_vector_lit(weights)
         proj = F.aggregate(
             F.zip_with(F.col(vec_col), plane, lambda x, w: x.cast("double") * w),
             F.lit(0.0),

@@ -32,7 +32,7 @@ from .operators.dedup import (
 )
 from .operators.embedder import embed_deterministic
 from .operators.ids import with_metadata, with_vector_id
-from .operators.search import knn_join, topk_cosine
+from .operators.search import knn_join, query_vector_lit, topk_cosine
 from .operators.text_analysis import corpus_rollup, doc_stats, fingerprint, language_id
 
 # ---- shared constants (oracle.py imports these — single source) ----
@@ -3005,7 +3005,7 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     only. The oracle replays both legs and the fusion in DuckDB."""
     from .functions.hashing import det_components_py, hash_components
     from .functions.text import tokens
-    from .operators.search import query_vector_lit, ranked_topk, rrf_fuse
+    from .operators.search import ranked_topk, rrf_fuse
 
     docs = read_table(spark, sf_dir, "documents")
     qterms = sorted(set(QUERY_TEXT.split()))
@@ -3301,7 +3301,7 @@ def clustered_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     is scale-invariant per vector)."""
     emb = read_table(spark, sf_dir, "embeddings")
     cents = [det_embed_py(f"cluster:{l}", EMBED_DIM) for l in range(ANN_N_LABELS)]
-    cent_lit = F.array(*[F.array(*[F.lit(float(x)) for x in c]) for c in cents])
+    cent_lit = F.array(*[query_vector_lit(c) for c in cents])
     cent = F.element_at(cent_lit, F.col("label") + 1)
     derived = F.zip_with(
         cent, F.col("embedding"), lambda c, x: c + F.lit(ANN_ALPHA) * x
@@ -3378,7 +3378,7 @@ def q3_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.round("score", 6).alias("score")
     )
     scored = emb.select(
-        "vec_id", F.round(cosine(F.col("embedding"), F.array([F.lit(float(x)) for x in qv])), 6).alias("s")
+        "vec_id", F.round(cosine(F.col("embedding"), query_vector_lit(qv)), 6).alias("s")
     )
 
     def _probe_leg():
@@ -3569,7 +3569,7 @@ def q3_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     scored = emb.select(
         "vec_id",
-        cosine(F.col("embedding"), F.array([F.lit(float(x)) for x in qv])).alias("s"),
+        cosine(F.col("embedding"), query_vector_lit(qv)).alias("s"),
     )
 
     def _probe_leg():

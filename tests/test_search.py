@@ -517,3 +517,136 @@ def test_brp_lsh_survives_zero_vector(spark):
     # a zero QUERY vector must not poison the probe either
     got0 = idx.query([0.0] * 8, k=2).collect()
     assert len(got0) == 2
+
+
+def _labelled_ivf(spark, tmp_path, n=120, dim=16):
+    from pdf_using_hugging_face_and_vector_database_spark.operators.ann import (
+        build_ivf_index,
+    )
+
+    base = spark.createDataFrame(
+        [(i, f"L{i % 3}", det_embed_py(f"v:{i}", dim)) for i in range(n)],
+        "vec_id long, label string, embedding array<double>",
+    )
+    path = str(tmp_path / "ivf")
+    build_ivf_index(base, path, n_cells=4, iters=1, dim=dim, fingerprint="t")
+    return path
+
+
+def test_ivf_probe_is_one_spark_job(spark, tmp_path):
+    """The probe reads the assigned table with the schema recorded in
+    the marker, so Spark starts no schema-inference job: one probe
+    collect is exactly one job. A marker without the schema counts as
+    absent."""
+    import json
+    import os
+
+    from pdf_using_hugging_face_and_vector_database_spark.operators.ann import (
+        ivf_index_exists,
+        probe_ivf_index,
+    )
+
+    path = _labelled_ivf(spark, tmp_path)
+    sc = spark.sparkContext
+    group = f"probe-jobs-{os.getpid()}"
+    sc.setJobGroup(group, group)
+    try:
+        rows = probe_ivf_index(
+            spark, path, det_embed_py("v:7", 16), k=5, nprobe=2
+        ).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(rows) == 5 and rows[0]["vec_id"] == 7
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+    marker = os.path.join(path, "centroids.json")
+    with open(marker) as f:
+        meta = json.load(f)
+    assert [f["name"] for f in meta["schema"]["fields"]] == [
+        "vec_id", "label", "embedding", "cell",
+    ]
+    del meta["schema"]
+    with open(marker, "w") as f:
+        json.dump(meta, f)
+    assert not ivf_index_exists(path)
+    with pytest.raises(FileNotFoundError):
+        probe_ivf_index(spark, path, det_embed_py("v:7", 16), k=5, nprobe=2)
+
+
+def _tree_state(root):
+    import os
+
+    return sorted(
+        (os.path.relpath(os.path.join(d, f), root), os.path.getsize(os.path.join(d, f)))
+        for d, _dirs, fs in os.walk(root)
+        for f in fs
+    )
+
+
+def test_ivf_append_rejects_mismatched_schema(spark, tmp_path):
+    """An append whose columns differ from the recorded schema (a float
+    embedding, a missing label) raises before any write: the marker
+    and assigned/ stay byte-for-byte as they were."""
+    import os
+
+    from pdf_using_hugging_face_and_vector_database_spark.operators.ann import (
+        append_ivf_index,
+    )
+
+    path = _labelled_ivf(spark, tmp_path)
+    marker = os.path.join(path, "centroids.json")
+    with open(marker, "rb") as f:
+        marker_before = f.read()
+    tree_before = _tree_state(os.path.join(path, "assigned"))
+    v = det_embed_py("x", 16)
+    bad = {
+        "float_embedding": spark.createDataFrame(
+            [(999, "L0", v)], "vec_id long, label string, embedding array<float>"
+        ),
+        "missing_label": spark.createDataFrame(
+            [(999, v)], "vec_id long, embedding array<double>"
+        ),
+    }
+    for name, df in bad.items():
+        with pytest.raises(ValueError, match="recorded columns"):
+            append_ivf_index(spark, path, df, tag=name)
+    with open(marker, "rb") as f:
+        assert f.read() == marker_before
+    assert _tree_state(os.path.join(path, "assigned")) == tree_before
+
+
+def test_ivf_append_observed_count(spark, tmp_path):
+    """The append's row count comes from an Observation on its write:
+    it equals the batch size, a repeated tag returns 0, and an empty
+    batch returns 0 (under a timeout, so a hung Observation.get fails
+    this test instead of hanging the suite)."""
+    import threading
+
+    from pdf_using_hugging_face_and_vector_database_spark.operators.ann import (
+        append_ivf_index,
+    )
+    from pdf_using_hugging_face_and_vector_database_spark.store import read_marker
+
+    path = _labelled_ivf(spark, tmp_path)
+    schema = "vec_id long, label string, embedding array<double>"
+    batch = spark.createDataFrame(
+        [(1000 + i, "L1", det_embed_py(f"new:{i}", 16)) for i in range(7)], schema
+    )
+    assert append_ivf_index(spark, path, batch, tag="b7") == 7
+    assert append_ivf_index(spark, path, batch, tag="b7") == 0
+
+    out = {}
+
+    def _empty():
+        out["n"] = append_ivf_index(
+            spark, path, spark.createDataFrame([], schema), tag="empty"
+        )
+
+    t = threading.Thread(target=_empty, daemon=True)
+    t.start()
+    t.join(120)
+    assert not t.is_alive(), "empty append hung"
+    assert out == {"n": 0}
+    appends = read_marker(f"{path}/centroids.json")["appends"]
+    assert appends == {"b7": 7, "empty": 0}

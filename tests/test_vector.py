@@ -338,3 +338,83 @@ def test_mmr_select_skips_zero_vector_candidate(spark):
     ids = [t[1] for t in picked]
     assert 4 not in ids  # the zero vector is unselectable
     assert len(ids) == 3 and ids[0] == 1  # finite ranking intact
+
+
+def _lit_doubles_bits(spark, col):
+    import struct
+
+    vals = spark.range(1).select(col.alias("q")).head()["q"]
+    return [struct.pack("<d", x) for x in vals]
+
+
+def test_query_vector_lit_is_bitwise_per_element_literal(spark):
+    """The one-call query literal (comma-joined repr, split, cast)
+    must give the same doubles, bit for bit, as one F.lit per
+    component, including signed zero, subnormals, 17-digit values,
+    the extremes, NaN and the infinities."""
+    from pdf_using_hugging_face_and_vector_database_spark.operators.search import (
+        query_vector_lit,
+    )
+
+    vec = [
+        -0.0, 0.0, 5e-324, -5e-324, 1e-320, 2.2250738585072014e-308,
+        0.1, 1 / 3, 0.30000000000000004, 123456789.12345678,
+        -9.876543210987654e-05, 1.7976931348623157e308,
+        -1.7976931348623157e308, float("nan"), float("inf"), float("-inf"),
+    ]
+    want = _lit_doubles_bits(spark, F.array(*[F.lit(float(x)) for x in vec]))
+    got = _lit_doubles_bits(spark, query_vector_lit(vec))
+    assert got == want
+    assert len(got) == len(vec)
+
+
+def test_query_vector_lit_empty_vector_keeps_outcome(spark, sf_dir):
+    """An empty query vector stays the empty array() it always was:
+    splitting "" would give one empty string, which an ANSI cast
+    rejects. Top-k against it still returns k rows with NULL scores."""
+    from pdf_using_hugging_face_and_vector_database_spark.operators.search import (
+        query_vector_lit,
+        topk_cosine,
+    )
+
+    assert spark.range(1).select(query_vector_lit([]).alias("q")).head()["q"] == []
+    rows = topk_cosine(read_table(spark, sf_dir, "embeddings"), [], k=3).collect()
+    assert len(rows) == 3
+    assert all(r["score"] is None for r in rows)
+
+
+def test_query_literals_fold_to_one_literal(spark, sf_dir):
+    """The optimized plans hold each query vector (and the clustered
+    corpus's centroid matrix) as one folded array literal: no split
+    or string cast survives to be evaluated per row."""
+    from pdf_using_hugging_face_and_vector_database_spark.operators.search import (
+        topk_cosine,
+    )
+    from pdf_using_hugging_face_and_vector_database_spark.queries import (
+        clustered_embeddings,
+    )
+
+    qv = [(i % 7) / 4 - 0.75 for i in range(64)]
+    df = topk_cosine(read_table(spark, sf_dir, "embeddings"), qv, k=5)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "split(" not in plan and "as array<double>" not in plan
+    assert "[" + ",".join(repr(x) for x in qv) + "]" in plan
+    cplan = clustered_embeddings(spark, sf_dir)._jdf.queryExecution()
+    cplan = cplan.optimizedPlan().toString()
+    assert "split(" not in cplan and "as array<double>" not in cplan
+
+
+def test_ivf_assign_udf_ties_to_first_cell(spark):
+    """Cell assignment is the 1-based argmax of the centroid dot
+    products; equal scores go to the lowest cell id."""
+    from pdf_using_hugging_face_and_vector_database_spark.operators.ann import (
+        ivf_assign_udf,
+    )
+
+    cents = [[0.0, 1.0], [1.0, 0.0], [1.0, 0.0]]
+    df = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 2.0]), (2, [1.0, 1.0])],
+        "id long, v array<double>",
+    )
+    got = df.select("id", ivf_assign_udf(cents)(F.col("v")).alias("c")).collect()
+    assert {r["id"]: r["c"] for r in got} == {0: 2, 1: 1, 2: 1}
